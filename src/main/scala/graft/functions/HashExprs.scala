@@ -1420,46 +1420,35 @@ object VecKernels {
     ab / (java.lang.Math.sqrt(aa) * java.lang.Math.sqrt(bb))
   }
 
-  /** Nearest-centroid scan (N5+N6): squared-L2 against every centroid
-    * (flat row-major k×d matrix), strictly-less update ⇒ lowest cid on
-    * ties — value-identical to the HOF
+  /** Nearest centroid (N5+N6) of one row through the shared exact
+    * search — value-identical to the HOF
     * `array_min(array(struct(sqdist, cid)...))` form: per-dim left-fold
-    * sums in index order, lexicographic (dist2, cid) min.
+    * sums in index order, lexicographic (dist2, cid) min. The search
+    * starts from +∞, so a row whose every distance is NaN or +∞ (a NaN
+    * or infinite coordinate) yields (+∞, 0). `p` (length d) and `out`
+    * (length 1) are the caller's scratch, reused across rows.
     */
-  def nearest(v: ArrayData, cents: Array[Double], d: Int): org.apache.spark.sql.catalyst.InternalRow = {
-    val k = cents.length / d
-    // best starts at 0, not -1: a NaN in v makes every comparison false
-    // and must still yield a valid cid (cluster 0, matching stepBlock)
-    var best = 0
-    var bestD = Double.PositiveInfinity
-    var c = 0
-    while (c < k) {
-      var dist = 0.0
-      var j = 0
-      val off = c * d
-      while (j < d) {
-        val t = v.getDouble(j) - cents(off + j)
-        dist += t * t
-        j += 1
-      }
-      if (dist < bestD) { bestD = dist; best = c }
-      c += 1
-    }
+  def nearest(v: ArrayData, nc: graft.ml.NearestCentroid,
+      p: Array[Double], out: Array[Double]): org.apache.spark.sql.catalyst.InternalRow = {
+    nc.load(v, p)
+    val cid = nc.nearest(p, Double.PositiveInfinity, out)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](bestD, best))
+      Array[Any](out(0), cid))
   }
+
+  def nearest(v: ArrayData, nc: graft.ml.NearestCentroid): org.apache.spark.sql.catalyst.InternalRow =
+    nearest(v, nc, new Array[Double](nc.d), new Array[Double](1))
 }
 
 /** nearest_centroid(v: array<double>) → struct<dist2: double, cid: int>.
   * The centroid matrix is a driver-side constant on the expression (the
-  * reference's broadcast-centroids J3/C3 pattern); one tight loop per
-  * row replaces k separate fold expressions, so k=1000+ works without
+  * reference's broadcast-centroids J3/C3 pattern), held as one
+  * `NearestCentroid` search built on the driver; one call per row
+  * replaces k separate fold expressions, so k=1000+ works without
   * expression-tree blowup.
   */
 final case class NearestCentroidExpr(child: Expression,
-    centroids: Array[Double], d: Int) extends UnaryExpression {
-  require(d > 0 && centroids.length % d == 0 && centroids.nonEmpty,
-    "bad centroid matrix shape")
+    centroids: graft.ml.NearestCentroid) extends UnaryExpression {
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     if (DataType.equalsStructurally(child.dataType,
         ArrayType(org.apache.spark.sql.types.DoubleType),
@@ -1475,12 +1464,17 @@ final case class NearestCentroidExpr(child: Expression,
   override def prettyName: String = "graft_nearest_centroid"
 
   override protected def nullSafeEval(input: Any): Any =
-    VecKernels.nearest(input.asInstanceOf[ArrayData], centroids, d)
+    VecKernels.nearest(input.asInstanceOf[ArrayData], centroids)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("centroids", centroids, "double[]")
+    val centsRef = ctx.addReferenceObj("centroids", centroids,
+      "graft.ml.NearestCentroid")
+    val point = ctx.addMutableState("double[]", "ncPoint",
+      v => s"$v = new double[${centroids.d}];")
+    val dist = ctx.addMutableState("double[]", "ncDist",
+      v => s"$v = new double[1];")
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VecKernels.nearest($c, $centsRef, $d)")
+      s"graft.functions.VecKernels.nearest($c, $centsRef, $point, $dist)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroidExpr =
@@ -1861,8 +1855,7 @@ object GraftFunctions {
     column(SignLshExpr(expression(v), planes.flatten, dim, bitsPerBand))
   }
   def nearestCentroid(v: Column, centroids: Array[Array[Double]]): Column =
-    column(NearestCentroidExpr(expression(v), centroids.flatten,
-      centroids.head.length))
+    column(NearestCentroidExpr(expression(v), graft.ml.NearestCentroid(centroids)))
   def normTokens(text: Column): Column =
     column(NormTokensExpr(expression(text)))
   def termCounts(tokens: Column, vocab: Seq[String]): Column =

@@ -3,6 +3,7 @@ package graft.ml
 import graft.vec.VectorOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.apache.spark.storage.StorageLevel
 
 /** Lloyd's K-Means re-expressed Spark-first — the reference's headline
@@ -13,7 +14,17 @@ import org.apache.spark.storage.StorageLevel
   *  - broadcast centroids per iteration (J3/C3) → a *literal* centroid
   *    array folded into one projection: the assignment is a single
   *    codegen'd map stage with zero shuffle and no join at all;
-  *  - SelectNearestCenter flatMap + combineGroup/reduceGroup (A3/A5/N6)
+  *  - SelectNearestCenter (N5+N6), which scans all k centroids per
+  *    point → `NearestCentroid`, one exact search built once per
+  *    centroid set. For large k the centroids are sorted on one
+  *    coordinate; each point scans outward from its binary-search
+  *    position and stops a direction once that coordinate's `t*t`
+  *    exceeds the best distance so far (a lower bound on every IEEE
+  *    partial sum of squares, so nothing that could win or tie is
+  *    skipped). It returns the full scan's cid, lowest cid on ties,
+  *    while evaluating a small fraction of the k distances; for small k
+  *    it is the full scan;
+  *  - combineGroup/reduceGroup (A3/A5)
   *    → `groupBy(cid, dim).agg(sum, count)`: Catalyst's hash aggregate
   *    does the map-side partial (combine) and final merge automatically;
   *  - bulk iteration (I1/I2) → driver loop (Iterate.loop) holding the
@@ -36,12 +47,12 @@ object KMeans {
       lastShift: Double)
 
   /** Nearest-centroid assignment (N5+N6) as a single projection over a
-    * literal centroid set, via the native one-pass expression
-    * (graft.functions.NearestCentroidExpr): the HOF
-    * `array_min(array(struct(sqdist, cid)...))` form built k fold
-    * expressions per row, which blows up the expression tree at the
-    * reference's k=1000+. Value-identical (same fold order, same
-    * lowest-cid tiebreak — proven in HashExprsSpec). Returns
+    * literal centroid set, via the native expression
+    * (graft.functions.NearestCentroidExpr) over one `NearestCentroid`
+    * search: the HOF `array_min(array(struct(sqdist, cid)...))` form
+    * built k fold expressions per row, which blows up the expression
+    * tree at the reference's k=1000+. Value-identical (same fold order,
+    * same lowest-cid tiebreak — proven in HashExprsSpec). Returns
     * struct(dist2, cid).
     */
   def assign(v: Column, centroids: Array[Array[Double]]): Column =
@@ -69,72 +80,41 @@ object KMeans {
   /** A5 variant of `step`: explicit per-partition pre-aggregation, the
     * reference's KMeansBlock plan (kmeans/KMeansBlock.java:139-203
     * SelectNearestCenter flatMap accumulating a local per-centroid map,
-    * then combineGroup/reduceGroup :46-99). Each partition scans its
-    * points once against the broadcast centroids, keeps k local
-    * (sum[d], count) accumulators, and emits exactly k records — the
-    * shuffle is k rows per partition regardless of point count. Results
-    * are identical to `step` up to FP summation order.
+    * then combineGroup/reduceGroup :46-99). Each partition reads its
+    * points unboxed from the plan's internal rows, assigns each through
+    * one `NearestCentroid` built on the driver and broadcast (pruned
+    * for large k, and exact: the full scan's cid, lowest cid on ties,
+    * from a small fraction of the k distances), keeps
+    * k local (sum[d], count) accumulators, and emits one record per
+    * non-empty cluster — the shuffle is at most k rows per partition
+    * regardless of point count. Points are summed in partition order, so
+    * results are identical to `step` up to FP summation order. Typed
+    * errors: an empty or ragged centroid set, a `v` column that is not
+    * array<double>, and a null point or one whose length is not the
+    * centroids' dimension.
     */
   def stepBlock(points: DataFrame, centroids: Array[Array[Double]]): Array[Array[Double]] = {
-    val spark = points.sparkSession
-    val k = centroids.length
-    val d = centroids.head.length
-    val cBc = spark.sparkContext.broadcast(centroids)
-    val partials = points.select(col("v")).rdd.mapPartitions { it =>
-      val cs = cBc.value
-      // r21: the row's array<double> arrives as a Seq whose `apply`
-      // boxes per element — at k=1000 the assignment loop read it
-      // k·d times per point through that path. One primitive copy per
-      // point (d elements) and a flattened centroid matrix keep the
-      // hot loop on unboxed arrays; the op ORDER per accumulator is
-      // unchanged, so sums are bit-identical (m04's oracle rides it).
-      val flat = new Array[Double](k * d)
-      var ci = 0
-      while (ci < k) {
-        System.arraycopy(cs(ci), 0, flat, ci * d, d)
-        ci += 1
-      }
+    val nc = NearestCentroid(centroids)
+    val k = nc.k
+    val d = nc.d
+    val vs = points.select(col("v"))
+    // the unboxed read below takes 8-byte doubles on trust
+    vs.schema.head.dataType match {
+      case ArrayType(DoubleType, _) =>
+      case t => throw new IllegalArgumentException(
+        s"stepBlock needs v: array<double>, got ${t.sql}")
+    }
+    val ncBc = points.sparkSession.sparkContext.broadcast(nc)
+    val partials = vs.queryExecution.toRdd.mapPartitions { it =>
+      val nc = ncBc.value
       val sums = Array.ofDim[Double](k, d)
       val counts = new Array[Long](k)
       val v = new Array[Double](d)
-      // d == 2 register path (the baseline shape): the generic loop
-      // pays index arithmetic + loop control per dimension, which at
-      // d=2 is most of the work; hoisting the two coordinates into
-      // registers keeps the identical FP op sequence (t0²+t1² is the
-      // same ascending-j add order), so sums stay bit-identical.
-      if (d == 2) {
-        it.foreach { row =>
-          val sv = row.getAs[scala.collection.Seq[Double]](0)
-          val v0 = sv(0); val v1 = sv(1)
-          var best = 0; var bestD = Double.MaxValue
-          var c = 0
-          while (c < k) {
-            val t0 = v0 - flat(c * 2)
-            val t1 = v1 - flat(c * 2 + 1)
-            val dist = t0 * t0 + t1 * t1
-            if (dist < bestD) { bestD = dist; best = c }
-            c += 1
-          }
-          val sb = sums(best)
-          sb(0) += v0; sb(1) += v1
-          counts(best) += 1
-        }
-      } else it.foreach { row =>
-        val sv = row.getAs[scala.collection.Seq[Double]](0)
-        var j = 0
-        while (j < d) { v(j) = sv(j); j += 1 }
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var dist = 0.0
-          val off = c * d
-          j = 0
-          while (j < d) { val t = v(j) - flat(off + j); dist += t * t; j += 1 }
-          if (dist < bestD) { bestD = dist; best = c }
-          c += 1
-        }
+      it.foreach { row =>
+        nc.load(row.getArray(0), v)
+        val best = nc.nearest(v)
         val sb = sums(best)
-        j = 0
+        var j = 0
         while (j < d) { sb(j) += v(j); j += 1 }
         counts(best) += 1
       }
@@ -146,7 +126,7 @@ object KMeans {
       while (j < s1.length) { s1(j) += s2(j); j += 1 }
       (s1, n1 + n2)
     }.collect()
-    cBc.destroy()
+    ncBc.destroy()
     val next = centroids.map(_.clone())
     partials.foreach { case (c, (s, n)) =>
       next(c) = s.map(_ / n)
@@ -241,7 +221,7 @@ object KMeans {
       maxIter: Int,
       tol: Double = 0.0): Model = {
     val k = init.length
-    val d = init.head.length
+    val d = NearestCentroid.dims(init)
     var cur = init.map(_.clone())
     var iters = 0
     var converged = false
@@ -249,15 +229,9 @@ object KMeans {
     while (iters < maxIter && !converged) {
       val sums = Array.ofDim[Double](k, d)
       val counts = new Array[Long](k)
+      val nc = NearestCentroid(cur)
       pts.foreach { v =>
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var dist = 0.0; var j = 0
-          while (j < d) { val t = v(j) - cur(c)(j); dist += t * t; j += 1 }
-          if (dist < bestD) { bestD = dist; best = c }
-          c += 1
-        }
+        val best = nc.nearest(v)
         var j = 0
         while (j < d) { sums(best)(j) += v(j); j += 1 }
         counts(best) += 1
@@ -381,24 +355,18 @@ object KMeans {
   def weightedFitLocal(pts: Array[Array[Double]], weights: Array[Double],
       k: Int, maxIter: Int): Array[Array[Double]] = {
     require(pts.length >= k, s"${pts.length} candidates < k=$k")
-    val d = pts.head.length
     val seed = pts.indices.sortBy(i => (-weights(i), i)).take(k)
     var cur = seed.map(pts(_).clone()).toArray
+    val d = NearestCentroid.dims(cur)
     var it = 0
     while (it < maxIter) {
       val sums = Array.ofDim[Double](k, d)
       val wsum = new Array[Double](k)
+      val nc = NearestCentroid(cur)
       var p = 0
       while (p < pts.length) {
         val v = pts(p)
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var dist = 0.0; var j = 0
-          while (j < d) { val t = v(j) - cur(c)(j); dist += t * t; j += 1 }
-          if (dist < bestD) { bestD = dist; best = c }
-          c += 1
-        }
+        val best = nc.nearest(v)
         val w = weights(p)
         var j = 0
         while (j < d) { sums(best)(j) += w * v(j); j += 1 }

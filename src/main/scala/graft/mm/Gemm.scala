@@ -157,18 +157,4 @@ object Gemm {
   def serialMultiply(a: Array[Double], aRows: Int, aCols: Int,
       bColMajor: Array[Double], bCols: Int): Array[Double] =
     gemm(a, aRows, aCols, bColMajor, bCols)
-
-  /** Text sink (K1): one "r c value" line per cell, written distributed
-    * (blocks explode to lines; no single-task squeeze).
-    */
-  def writeAsText(spark: SparkSession, blocks: Dataset[DoubleMatrixBlock],
-      path: String): Unit = {
-    import spark.implicits._
-    blocks.flatMap { bl =>
-      for {
-        i <- 0 until bl.blockRows
-        j <- 0 until bl.matrixCols
-      } yield s"${bl.start + i} $j ${bl.data(i * bl.matrixCols + j)}"
-    }.write.mode("overwrite").text(path)
-  }
 }

@@ -448,24 +448,6 @@ object Multimodal {
     out.toArray
   }
 
-  /** Distributed CDC pass: one mapPartitions over the payloads, chunk
-    * rows emitted in place (no shuffle; chunking is per-record). Output
-    * (media_id, chunk_idx, offset, len, hash) is the content-address
-    * table a dedup store ingests. */
-  def cdcChunks(media: Dataset[MediaRecord], minSize: Int, maxSize: Int,
-      maskBits: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.flatMap { r =>
-        cdcBoundaries(r.payload, minSize, maxSize, maskBits).iterator
-          .zipWithIndex.map { case ((off, len), i) =>
-            (r.media_id, i, off, len, fnv64(r.payload, off, len))
-          }
-      }
-    }.toDF("media_id", "chunk_idx", "offset", "len", "hash")
-  }
-
   /** Audio feature extraction: RMS energy + zero-crossing rate per
     * fixed-length window (the MFCC slot with a real codec).
     */

@@ -577,19 +577,9 @@ object VectorQueries {
       val sn = sample.map { case (id, v) => (id, normalize(v)) }
       val cents = KMeans.fitLocal(sn.map(_._2),
         sn.take(ivfPqCells).map(_._2), maxIter = 3).centroids
-      def nearestCell(v: Array[Double]): Int = {
-        var best = 0; var bd = Double.MaxValue
-        var c = 0
-        while (c < cents.length) {
-          var dd = 0.0; var j = 0
-          while (j < v.length) { val t = v(j) - cents(c)(j); dd += t * t; j += 1 }
-          if (dd < bd) { bd = dd; best = c }
-          c += 1
-        }
-        best
-      }
+      val cells = graft.ml.NearestCentroid(cents)
       val residuals = sn.map { case (_, v) =>
-        val c = cents(nearestCell(v))
+        val c = cents(cells.nearest(v))
         Array.tabulate(v.length)(j => v(j) - c(j))
       }
       val books = Array.tabulate(pqM) { j =>

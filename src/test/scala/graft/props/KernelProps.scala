@@ -142,7 +142,8 @@ object KernelProps extends Properties("graft.kernels") {
       Gen.long) { (v, k, seed) =>
       val cents = MatrixIO.randomMatrix(k, 4, seed)
       val row = graft.functions.VecKernels.nearest(
-        new GenericArrayData(v.toArray[Any]), cents, 4)
+        new GenericArrayData(v.toArray[Any]),
+        graft.ml.NearestCentroid(cents.grouped(4).toArray))
       val d2 = row.getDouble(0); val cid = row.getInt(1)
       val all = (0 until k).map { c =>
         (0 until 4).map { j =>
